@@ -54,6 +54,8 @@ from ..pinning import pin
 
 from ..streaming.incremental import (
     _committed_dirs,
+    _key_bucket,
+    _read_meta,
     apply_cdf_delta,
     merge_upsert,
     read_cdf_totals,
@@ -152,10 +154,12 @@ def _reseed_if_adopted(spark: SparkSession, root: str) -> None:
         adopt_token_stats(spark, sf_dir, root)
 
 
-def _doc_toks(docs: DataFrame) -> DataFrame:
+def _doc_toks(docs: DataFrame | None) -> DataFrame:
     """(doc_id, toks) — ONE tokenize pass over a document frame, shared
     by the tf and bigram lineages (r14, guide §2.4: the two merge chains
     each re-tokenized the same batch)."""
+    if docs is None:
+        raise ValueError("pass a document frame (docs) or its tokens (toks)")
     return docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
 
 
@@ -197,6 +201,26 @@ def _doc_bigrams(
         .groupBy("doc_id", "s.w1", "s.w2")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+
+
+def _touched_doc_buckets(
+    toks: DataFrame, targets: list[str]
+) -> list[set[int] | None]:
+    """The doc_id bucket set of a batch under each doc-keyed target's
+    stored bucket count (None for a target without a stored layout: its
+    merge is an initial load, or collects the set itself). ``toks`` has
+    one row per document of the batch, so its doc_ids are both the
+    merges' scope and every doc_id their updates can hold. One collect
+    serves every target."""
+    metas = [_read_meta(t, strict=True) for t in targets]
+    counts = [int(m["num_buckets"]) if m else None for m in metas]
+    nbs = sorted({nb for nb in counts if nb is not None})
+    if not nbs:
+        return counts
+    cols = [_key_bucket(["doc_id"], nb) for nb in nbs]
+    rows = toks.select(*cols).distinct().collect()
+    by_nb = {nb: {r[i] for r in rows} for i, nb in enumerate(nbs)}
+    return [by_nb.get(nb) for nb in counts]
 
 
 def _paths(root: str) -> dict[str, str]:
@@ -420,36 +444,28 @@ def apply_doc_updates(
     p = _paths(root)
     scope = docs.select("doc_id")
 
-    # On the UPDATE path (target exists), pin the computed change frames:
-    # merge_upsert executes its updates frame several times (touched-bucket
-    # collect, changelog insert/pre/post pieces, staging write — r13
-    # attribution), and _doc_tf/_doc_bigrams are tokenize+aggregate passes
-    # over the batch, so unpinned they re-ran per reference. The INITIAL
-    # load skips the pin: there updates is the full base corpus and the
-    # initial merge references it once — a checkpoint would just write the
-    # whole postings image to local storage twice. Each chain gates on its
-    # OWN target dir (ADVICE r13): a prior interrupted run can leave
-    # postings existing while bigrams does not, and a shared gate would
-    # then pin the full initial bigrams load.
-    def _chain_pin(target_dir: str):
-        return pin if os.path.isdir(target_dir) else (lambda df: df)
-
     # ONE tokenize pass for both chains (r14): the postings and bigrams
     # lineages share the pinned (doc_id, toks) frame instead of each
-    # re-tokenizing ``docs``. Pinned on BOTH paths — unlike the aggregate
-    # pins above, the token frame has two consumers even on the initial
-    # load, so the pin replaces a second full corpus scan+tokenize.
+    # re-tokenizing ``docs``. The per-chain tf/bigram frames stay unpinned:
+    # given the bucket set, an update merge executes its updates once,
+    # inside its pinned full-outer join.
     toks = pin(_doc_toks(docs))
+    # postings and bigrams both bucket on doc_id: one bucket collect over
+    # the pinned token frame serves both merges
+    postings_buckets, bigrams_buckets = _touched_doc_buckets(
+        toks, [p["postings"], p["bigrams"]]
+    )
 
     def _postings_chain() -> None:
         merge_upsert(
             spark,
-            _chain_pin(p["postings"])(_doc_tf(toks=toks)),
+            _doc_tf(toks=toks),
             p["postings"],
             keys=["doc_id", "token"],
             bucket_keys=["doc_id"],
             scope=scope,
             changelog_dir=p["postings_log"],
+            touched_buckets=postings_buckets,
         )
         # fold wave: every consumer of the postings feed at once (its own
         # inner pool — submitting back into the outer pool could exhaust
@@ -470,12 +486,13 @@ def apply_doc_updates(
     def _bigrams_chain() -> None:
         merge_upsert(
             spark,
-            _chain_pin(p["bigrams"])(_doc_bigrams(toks=toks)),
+            _doc_bigrams(toks=toks),
             p["bigrams"],
             keys=["doc_id", "w1", "w2"],
             bucket_keys=["doc_id"],
             scope=scope,
             changelog_dir=p["bigrams_log"],
+            touched_buckets=bigrams_buckets,
         )
         _fold_new_commits(
             spark, root, p["bigrams_log"], p["bigram_stats"], ["w1", "w2"], ["n"]

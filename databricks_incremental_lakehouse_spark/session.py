@@ -64,9 +64,10 @@ def build_spark(
     """Create (or fetch) a SparkSession tuned for this engine.
 
     ``SPARK_GRAFT_CPUS`` sets local parallelism (default ``*``).
-    ``spark.sql.shuffle.partitions`` defaults to 2x the local cores — small
-    enough to avoid tiny-task overhead at test SF, and AQE coalesces further;
-    on a real cluster this would be sized to ~128 MB per shuffle partition.
+    ``spark.sql.shuffle.partitions`` defaults to a fixed 32, whatever the
+    core count — small enough to avoid tiny-task overhead at test SF, and
+    AQE coalesces further; on a real cluster this would be sized to
+    ~128 MB per shuffle partition.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:

@@ -564,7 +564,9 @@ def merge_upsert(
     Partition-restricted: only buckets containing an updated/scoped key
     are read, merged, and swapped; every other bucket's files are
     untouched. The bucket-id collect is bounded by ``num_buckets``, never
-    by data size.
+    by data size. A caller that already holds the bucket set of its
+    updates ∪ scope ∪ deletes passes it as ``touched_buckets`` and skips
+    the collect; an id outside ``[0, num_buckets)`` raises ``ValueError``.
 
     The target's layout (``keys``/``bucket_keys``/``partition_cols`` +
     ``num_buckets``) is pinned in a ``_merge_meta.json`` sidecar on initial
@@ -607,17 +609,16 @@ def merge_upsert(
     if not initial:
         meta = _read_meta(target_path, strict=True)
         if meta is not None:
-            for fld, val in (
-                ("keys", list(keys)),
-                ("bucket_keys", bucket_keys),
-                ("partition_cols", partition_cols),
-            ):
-                if list(meta.get(fld, val)) != val:
-                    raise ValueError(
-                        f"merge {fld} {val!r} do not match the target's "
-                        f"stored {fld} {meta[fld]!r} ({target_path})"
-                    )
+            _check_layout(meta, target_path, keys, bucket_keys, partition_cols)
             num_buckets = int(meta["num_buckets"])
+    if touched_buckets is not None:
+        touched_buckets = set(touched_buckets)
+        bad = touched_buckets - set(range(num_buckets))
+        if bad:
+            raise ValueError(
+                f"touched_buckets {bad!r} outside [0, {num_buckets}) "
+                f"({target_path})"
+            )
 
     evolved_cols: list[str] = []
     if not initial:
@@ -673,26 +674,16 @@ def merge_upsert(
             .distinct()
             .withColumn(BUCKET_COL, _key_bucket(bucket_keys, num_buckets))
         )
-    staging = target_path.rstrip("/") + "._staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    levels = len(partition_cols) + 1
-
     pending_changelog: tuple[str, str] | None = None
     if initial:
         merged = updates
-        touched: set[int] = set()
     else:
         if touched_buckets is not None:
-            # caller-supplied bucket set (internal fast path —
-            # apply_cdf_delta already collected exactly this set to prune
-            # its stored-totals read, and its updates/scope frames are
-            # grouped on the same keys, so re-collecting here would be one
-            # redundant Spark job per fold). The caller ASSERTS every
+            # caller-supplied bucket set: the caller asserts every
             # updates/scope/deletes row hashes into these buckets under
-            # the target's stored bucket count; a wrong set would merge
-            # against a partial current image, so only callers that derive
-            # the set with _key_bucket over the same columns may use it.
-            touched = set(touched_buckets)
+            # the target's stored bucket count (a wrong set would merge
+            # against a partial current image)
+            touched = touched_buckets
         else:
             tsrc = updates.select(BUCKET_COL)
             if scope is not None:
@@ -906,40 +897,17 @@ def merge_upsert(
     # instead of a sliver from every shuffle partition — file count stays
     # O(dirs), not O(dirs x shuffle_partitions). At 100 TB the same shuffle
     # is what Delta's optimizeWrite performs.
-    merged.repartition(*partition_cols, BUCKET_COL).write.mode(
-        "overwrite"
-    ).partitionBy(*partition_cols, BUCKET_COL).parquet(staging)
+    merged = merged.repartition(*partition_cols, BUCKET_COL)
     new_schema = updates.drop(BUCKET_COL).schema
-    schema_changed = not initial and (
-        meta is None
-        or meta.get("schema") != _nullable_schema(new_schema).jsonValue()
-    )
-    if schema_changed:
-        # stage the (possibly evolved) schema BEFORE any bucket swap: a
-        # crash between the last swap and the pin would otherwise leave
-        # readers on a stale schema that hides the evolved column until
-        # some later merge re-carries it. Promoted after the swaps (and by
-        # recovery); never visible to Spark's listing while staged.
-        _write_meta(
-            target_path, keys, num_buckets, bucket_keys, partition_cols,
-            schema=new_schema, staged=True,
-        )
-    # swap exactly the partition dirs the write produced (not the pre-write
-    # collect, whose lineage is recomputed by the write and could diverge
-    # under a nondeterministic source)
-    staged = _leaf_dirs(staging, levels)
     if initial:
+        staging, staged = _write_staging(merged, target_path, partition_cols)
         if not staged:  # empty initial batch: don't create a file-less target
             shutil.rmtree(staging, ignore_errors=True)
             return
         _swap_dir(staging, target_path)
         _write_meta(
-            target_path,
-            keys,
-            num_buckets,
-            bucket_keys,
-            partition_cols,
-            schema=updates.drop(BUCKET_COL).schema,
+            target_path, keys, num_buckets, bucket_keys, partition_cols,
+            schema=new_schema,
         )
         if changelog_dir is not None:  # initial load: everything is an insert
             commit_no = _next_commit(changelog_dir)
@@ -954,6 +922,94 @@ def merge_upsert(
                 cl_staging, os.path.join(changelog_dir, f"commit={commit_no}")
             )
         return
+    schema_changed = (
+        meta is None
+        or meta.get("schema") != _nullable_schema(new_schema).jsonValue()
+    )
+    _commit_buckets(
+        merged,
+        target_path,
+        partition_cols,
+        touched,
+        partition_scope=partition_scope,
+        staged_meta=(
+            dict(
+                keys=keys, num_buckets=num_buckets, bucket_keys=bucket_keys,
+                partition_cols=partition_cols, schema=new_schema,
+            )
+            if schema_changed
+            else None
+        ),
+        pending_changelog=pending_changelog,
+    )
+
+
+def _check_layout(
+    meta: dict,
+    target_path: str,
+    keys: Sequence[str],
+    bucket_keys: Sequence[str],
+    partition_cols: Sequence[str],
+) -> None:
+    """Fail loudly when a merge's key spec differs from the target's stored
+    layout: a different bucket key would scatter a key across buckets."""
+    for fld, val in (
+        ("keys", list(keys)),
+        ("bucket_keys", list(bucket_keys)),
+        ("partition_cols", list(partition_cols)),
+    ):
+        if list(meta.get(fld, val)) != val:
+            raise ValueError(
+                f"merge {fld} {val!r} do not match the target's "
+                f"stored {fld} {meta[fld]!r} ({target_path})"
+            )
+
+
+def _write_staging(
+    image: DataFrame, target_path: str, partition_cols: Sequence[str]
+) -> tuple[str, set[str]]:
+    """Write ``image`` (clustered by destination dir) into the target's
+    fresh hidden staging dir, partitioned like the target; returns the
+    staging dir and the leaf dirs the write produced."""
+    staging = target_path.rstrip("/") + "._staging"
+    shutil.rmtree(staging, ignore_errors=True)
+    image.write.mode("overwrite").partitionBy(
+        *partition_cols, BUCKET_COL
+    ).parquet(staging)
+    return staging, _leaf_dirs(staging, len(partition_cols) + 1)
+
+
+def _commit_buckets(
+    image: DataFrame,
+    target_path: str,
+    partition_cols: Sequence[str],
+    touched: set[int],
+    partition_scope: dict | None = None,
+    staged_meta: dict | None = None,
+    pending_changelog: tuple[str, str] | None = None,
+) -> None:
+    """Commit the new image of the ``touched`` buckets of an existing merge
+    target — the one bucket-commit protocol of :func:`merge_upsert` and
+    :func:`apply_cdf_delta`. ``image`` holds the complete new contents of
+    those buckets, clustered by destination dir. It is written to staging
+    first; each staged leaf dir is then swapped in, and a touched dir the
+    image left empty is dropped. ``staged_meta`` (:func:`_write_meta`
+    arguments) is staged before the first swap and promoted after the
+    last. ``pending_changelog`` (staging, final) is published only once
+    the table holds the whole image."""
+    partition_cols = list(partition_cols)
+    levels = len(partition_cols) + 1
+    staging, staged = _write_staging(image, target_path, partition_cols)
+    if staged_meta is not None:
+        # stage the (possibly evolved) schema BEFORE any bucket swap: a
+        # crash between the last swap and the pin would otherwise leave
+        # readers on a stale schema that hides the evolved column until
+        # some later merge re-carries it. Promoted after the swaps (and by
+        # recovery); never visible to Spark's listing while staged.
+        _write_meta(target_path, staged=True, **staged_meta)
+    # swap exactly the partition dirs the write produced (not the pre-write
+    # collect, whose lineage is recomputed by the write and could diverge
+    # under a nondeterministic source)
     for rel in sorted(staged):
         dst = os.path.join(target_path, rel)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
@@ -977,10 +1033,10 @@ def merge_upsert(
         leaf = os.path.join(
             target_path, *[f"{c}=0" for c in partition_cols], f"{BUCKET_COL}=0"
         )
-        merged.drop(*partition_cols, BUCKET_COL).limit(0).coalesce(1).write.mode(
+        image.drop(*partition_cols, BUCKET_COL).limit(0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(leaf)
-    if schema_changed:
+    if staged_meta is not None:
         _promote_meta(target_path)
     if pending_changelog is not None:
         # the table now fully holds this merge — publish its change commit
@@ -1064,113 +1120,81 @@ def apply_cdf_delta(
     groups with :func:`read_cdf_totals`, which filters the tombstones."""
     group_cols = list(group_cols)
     sum_cols = list(sum_cols)
-    if batch_df.isEmpty():
-        return
     sign = F.when(
         F.col("_op").isin("insert", "update_postimage"), F.lit(1)
     ).otherwise(F.lit(-1))
+    # the batch's signed delta per group, already in the totals' shape: it
+    # is the initial image, and a term of every later one
     delta = (
         batch_df.withColumn("_sign", sign)
         .groupBy(*group_cols)
         .agg(
-            F.sum("_sign").alias("_dn"),
+            F.sum("_sign").alias("n_rows"),
             *[
-                F.sum(F.col("_sign") * F.col(c)).alias(f"_d_{c}")
+                F.coalesce(
+                    F.sum(F.col("_sign") * F.col(c)), F.lit(0.0)
+                ).alias(f"sum_{c}")
                 for c in sum_cols
             ],
         )
-    ).transform(pin)
+    )
     sess = batch_df.sparkSession
+    _recover_swaps(target_path)
     # an existing TABLE is one with a merge sidecar or parquet data — a
     # directory holding only auxiliary files (e.g. the fold watermark's
     # intent stamp, written before the first fold lands) is still an empty
     # target. strict: a corrupt sidecar over real data must fail loudly,
     # never read-as-empty.
-    if _has_table(target_path):
-        meta = _read_meta(target_path, strict=True)
-        if meta is None:
+    if not _has_table(target_path):
+        merge_upsert(sess, delta, target_path, keys=group_cols)
+        return
+    meta = _read_meta(target_path, strict=True)
+    if meta is None:
+        raise ValueError(
+            f"cdf totals target {target_path!r} has data but no merge "
+            "sidecar; refusing to treat it as empty"
+        )
+    _check_layout(meta, target_path, group_cols, group_cols, ())
+    if meta.get("schema"):
+        from pyspark.sql.types import StructType
+
+        stored = StructType.fromJson(meta["schema"]).simpleString()
+        if stored != delta.schema.simpleString():
             raise ValueError(
-                f"cdf totals target {target_path!r} has data but no merge "
-                "sidecar; refusing to treat it as empty"
+                f"cdf delta schema {delta.schema.simpleString()} does not "
+                f"match the totals target's stored {stored} ({target_path})"
             )
-        nb = int(meta["num_buckets"])
-        buckets = sorted(
-            {
-                r[0]
-                for r in delta.select(_key_bucket(group_cols, nb).alias("b"))
-                .distinct()
-                .collect()
-            }
+    # the delta is consumed twice (bucket collect, image), so pin it once;
+    # its bucket set doubles as the emptiness check
+    delta = pin(
+        delta.withColumn(
+            BUCKET_COL, _key_bucket(group_cols, int(meta["num_buckets"]))
         )
-        cur0 = (
-            sess.read.parquet(target_path)
-            .filter(F.col(BUCKET_COL).isin(buckets))
-            .drop(BUCKET_COL)
-        )
-        # null-safe: a NULL-valued group's stored totals must join its delta
-        # (plain = would drop the stored side and corrupt the running sum)
-        dk = delta.select(*group_cols)
-        current = cur0.join(
-            F.broadcast(dk), _ns_cond(cur0, dk, group_cols), "left_semi"
-        )
-    else:
-        buckets = None  # initial load: the merge skips the collect anyway
-        current = sess.createDataFrame(
-            [],
-            ", ".join(
-                [f"{c} {t}" for c, t in delta.select(*group_cols).dtypes]
-                + ["n_rows long"]
-                + [f"sum_{c} double" for c in sum_cols]
-            ),
-        )
-    # delta's columns are renamed before the outer join: `current` already
-    # carries delta in its lineage (the pruning semi-join above), so
-    # dataset-qualified refs would be ambiguous; unique names need none.
-    # The join itself is null-safe — a NULL-valued group must pair its
-    # stored totals with its delta or the running sum silently forks.
-    delta_r = delta.select(
-        *[F.col(c).alias(f"_g_{c}") for c in group_cols],
-        "_dn",
-        *[f"_d_{c}" for c in sum_cols],
     )
-    cond = F.col(group_cols[0]).eqNullSafe(F.col(f"_g_{group_cols[0]}"))
-    for c in group_cols[1:]:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"_g_{c}"))
-    joined = current.join(delta_r, cond, "full_outer")
-    # pinned (r14, the c5e81e1 discipline): `new` is a COMPUTED frame —
-    # bucket-pruned stored-totals read + full-outer join — and the merge
-    # below executes its updates twice (touched-bucket collect, staging
-    # write). O(touched groups) rows; one execution instead of two per
-    # fold, across every stats/sketch/rollup fold in the warehouse.
-    new = joined.select(
-        *[
-            F.coalesce(F.col(c), F.col(f"_g_{c}")).alias(c)
-            for c in group_cols
-        ],
-        (
-            F.coalesce(F.col("n_rows"), F.lit(0))
-            + F.coalesce(F.col("_dn"), F.lit(0))
-        ).alias("n_rows"),
-        *[
-            (
-                F.coalesce(F.col(f"sum_{c}"), F.lit(0.0))
-                + F.coalesce(F.col(f"_d_{c}"), F.lit(0.0))
-            ).alias(f"sum_{c}")
-            for c in sum_cols
-        ],
-    ).transform(pin)
-    # the touched-bucket set was already collected above (the pruned
-    # stored-totals read); `new`'s groups are exactly the delta's groups
-    # (current was semi-joined onto them), so hand the set to the merge
-    # and skip its redundant bucket-collect job (one job per fold)
-    merge_upsert(
-        sess,
-        new,
-        target_path,
-        keys=group_cols,
-        scope=delta.select(*group_cols),
-        touched_buckets=buckets,
+    touched = {r[0] for r in delta.select(BUCKET_COL).distinct().collect()}
+    if not touched:
+        return
+    stored_totals = (
+        sess.read.schema(_nullable_schema(delta.schema))
+        .parquet(target_path)
+        .filter(F.col(BUCKET_COL).isin(sorted(touched)))
     )
+    # new image of the touched buckets: stored totals plus delta, summed
+    # per group. Grouping is null-safe (a NULL-valued group pairs its
+    # stored totals with its delta), each side holds a group at most once,
+    # and a two-term double sum has the same bits in either order. Clustering on
+    # the bucket first satisfies the grouping, so the one shuffle also
+    # clusters the rows for the bucket-dir write.
+    image = (
+        stored_totals.unionByName(delta)
+        .repartition(BUCKET_COL)
+        .groupBy(BUCKET_COL, *group_cols)
+        .agg(
+            F.sum("n_rows").alias("n_rows"),
+            *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in sum_cols],
+        )
+    )
+    _commit_buckets(image, target_path, (), touched)
 
 
 def read_cdf_totals(spark: SparkSession, target_path: str) -> DataFrame:

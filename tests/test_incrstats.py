@@ -739,3 +739,78 @@ def test_adopted_frames_survive_later_merges(spark, sf_correct):
         assert sketch_cms_heavy_hitters(spark, sf_correct).count() > 0
     finally:
         memo.clear()
+
+
+def test_doc_batch_bucket_set_covers_updates_and_scope(spark, monkeypatch):
+    """apply_doc_updates collects a batch's doc_id bucket set once and
+    hands it to both doc-keyed merges. On every update the supplied set
+    must equal the set recomputed from the merge's own updates and scope
+    under the target's stored bucket count: inserts, edits and NULL-text
+    images (scoped deletes, whose docs have no update rows)."""
+    import json
+    import os
+
+    from databricks_incremental_lakehouse_spark.llmdata import incrstats as I
+
+    real = I.merge_upsert
+    supplied = []
+
+    def checked(spark_, updates, target_path, *args, touched_buckets=None, **kw):
+        if touched_buckets is not None:
+            with open(os.path.join(target_path, "_merge_meta.json")) as f:
+                nb = json.load(f)["num_buckets"]
+            keys = kw["bucket_keys"]
+            src = updates.select(*keys).unionByName(kw["scope"].select(*keys))
+            want = {
+                r[0]
+                for r in src.select(
+                    F.pmod(F.xxhash64(*keys), F.lit(nb)).cast("int")
+                )
+                .distinct()
+                .collect()
+            }
+            assert set(touched_buckets) == want, (target_path, touched_buckets)
+        supplied.append((os.path.basename(target_path), touched_buckets))
+        return real(
+            spark_, updates, target_path, *args,
+            touched_buckets=touched_buckets, **kw,
+        )
+
+    monkeypatch.setattr(I, "merge_upsert", checked)
+    root = tempfile.mkdtemp(prefix="tokstats_b_")
+    corpus = {d: f"w{d} x{d % 3} w{d}" for d in range(1, 30)}
+    apply_doc_updates(spark, root, _docs(spark, list(corpus.items())))
+    # the initial load has no stored layout to bucket by
+    assert {t for t, b in supplied} == {"postings", "bigrams"}
+    assert all(b is None for _t, b in supplied)
+
+    edits = {31: "new doc here", 32: "z", 2: "w2 rewritten", 5: "x2"}
+    for batch in (
+        {31: edits[31], 32: edits[32]},  # inserts
+        {2: edits[2], 5: edits[5]},  # edits
+        {7: None, 8: None, 31: None},  # NULL text: scoped deletes
+    ):
+        supplied.clear()
+        apply_doc_updates(spark, root, _docs(spark, list(batch.items())))
+        assert sorted(t for t, _b in supplied) == ["bigrams", "postings"]
+        assert all(b for _t, b in supplied), supplied
+        for d, text in batch.items():
+            if text is None:
+                corpus.pop(d, None)
+            else:
+                corpus[d] = text
+        _assert_matches(spark, root, corpus)
+
+
+def test_doc_lineages_require_a_source():
+    """_doc_tf/_doc_bigrams need the documents or their token frame."""
+    import pytest
+
+    from databricks_incremental_lakehouse_spark.llmdata.incrstats import (
+        _doc_bigrams,
+        _doc_tf,
+    )
+
+    for fn in (_doc_tf, _doc_bigrams):
+        with pytest.raises(ValueError, match="docs"):
+            fn()

@@ -1150,6 +1150,84 @@ def test_cdf_delta_null_group(spark, tmp_path):
     assert got == {None: (2, 15.0), "a": (1, 2.0)}
 
 
+def _launched_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches from this thread, counted through the
+    status tracker under a private job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"job-count-{uuid.uuid4()}"
+    sc.setJobGroup(gid, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land async
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_cdf_fold_job_count(spark, tmp_path):
+    """A fold into an existing totals target costs a fixed, small number
+    of Spark jobs: pin the bucketed delta, collect its bucket set, and one
+    shuffle plus one write for the touched buckets' new image. The earlier
+    fold (emptiness scan, semi-joined totals read, full merge) launched 16
+    here."""
+    from databricks_incremental_lakehouse_spark.streaming import (
+        apply_cdf_delta,
+        read_cdf_totals,
+    )
+
+    totals = str(tmp_path / "totals")
+    schema = "g int, v double, _op string"
+    first = spark.createDataFrame(
+        [(i % 7, float(i), "insert") for i in range(40)], schema
+    )
+    apply_cdf_delta(first, totals, ["g"], ["v"])
+    batch = spark.createDataFrame(
+        [(i % 5, 1.0, "insert") for i in range(10)] + [(6, 6.0, "delete")],
+        schema,
+    )
+    n = _launched_jobs(spark, lambda: apply_cdf_delta(batch, totals, ["g"], ["v"]))
+    assert n <= 6, f"fold launched {n} jobs"
+
+    want = {}
+    for g, v, op in [(i % 7, float(i), "insert") for i in range(40)] + [
+        (i % 5, 1.0, "insert") for i in range(10)
+    ] + [(6, 6.0, "delete")]:
+        s = 1 if op == "insert" else -1
+        rows, tot = want.get(g, (0, 0.0))
+        want[g] = (rows + s, tot + s * v)
+    got = {r.g: (r.n_rows, r.sum_v) for r in read_cdf_totals(spark, totals).collect()}
+    assert got == want
+    # the fold checks the target's stored layout before touching it
+    with pytest.raises(ValueError, match="stored keys"):
+        apply_cdf_delta(batch.withColumnRenamed("g", "h"), totals, ["h"], ["v"])
+
+
+def test_merge_upsert_rejects_out_of_range_touched_buckets(spark, tmp_path):
+    """A caller-supplied bucket id outside [0, num_buckets) fails loudly,
+    before any Spark job, and leaves the target unchanged."""
+    target = str(tmp_path / "t")
+    schema = "id long, v double"
+    merge_upsert(
+        spark, spark.createDataFrame([(1, 1.0), (2, 2.0)], schema), target,
+        keys=["id"], num_buckets=4,
+    )
+    upd = spark.createDataFrame([(1, 5.0)], schema)
+    for bad in ([4], [0, -1]):
+        def run():
+            with pytest.raises(ValueError, match="outside"):
+                merge_upsert(
+                    spark, upd, target, keys=["id"], num_buckets=4,
+                    touched_buckets=bad,
+                )
+
+        assert _launched_jobs(spark, run) == 0
+    got = {r.id: r.v for r in read_merge_target(spark, target).collect()}
+    assert got == {1: 1.0, 2: 2.0}
+
+
 def test_changelog_commit_published_after_swap(spark, tmp_path):
     """Crash-safety contract of the feed: a torn commit dir (no _SUCCESS)
     is invisible to read_changelog, its slot is not reused, and a stranded
